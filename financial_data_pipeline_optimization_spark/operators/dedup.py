@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from financial_data_pipeline_optimization_spark.functions import explode_nonempty
+from financial_data_pipeline_optimization_spark.operators import graph, joins
 
 # ---------------------------------------------------------------------------
 # Keyed dedup (reference core)
@@ -803,6 +804,9 @@ def near_dup_clusters(
     label themselves). This is the full-corpus dedup contract: keep
     ``cluster_id == id`` rows, drop the rest, and chains A~B~C
     collapse to one survivor even when A~C was never emitted as a pair.
+    Consumers that only drop duplicates should anti-join
+    :func:`near_dup_members` instead: same gate and loop, no
+    per-document label table.
 
     ``pair_source`` selects the edge generator:
 
@@ -856,21 +860,112 @@ def near_dup_clusters(
     ``stats["exact_index_fanout"]`` its measured fan-out, so a
     production run can see WHICH plan it took without re-deriving
     the gate arithmetic (the ``kcore_peel`` ``stats`` convention).
-    r16/r17: ``stats["components_bound"]`` / ``stats["components_join"]``
-    record the label-join broadcast gate's size bound and chosen mode.
-    Since r17 the gate reads ``2 * fixpoint_edges`` from the CC loop's
-    already-materialized convergence output instead of running its own
-    count job over the label plan (see the label-join comment below
-    for the bound argument and the r16 A/B evidence).
+    ``stats["stars_rows"]`` / ``stats["stars_join"]`` record the size
+    of the converged star forest and whether the label join
+    broadcasts it (see :func:`_near_dup_stars`). ``cc_stats`` is
+    passed to ``graph.component_stars``.
+
+    ``carry_cols`` ride along on the one label join (consumers like
+    representative election would otherwise join the corpus a second
+    time just to recover a metadata column).
+
+    ``materialize=True`` checkpoints the label table once: consumers
+    that run MULTIPLE actions over these rows (leakage-safe splits,
+    budget plans, a range-sorted write's sampling pass) would
+    otherwise re-execute the label join per action — the labels are
+    (id, cluster_id [, carry]) rows, orders of magnitude smaller than
+    the corpus. Single-action consumers (run the labels straight into
+    one aggregate/collect and discard them) should pass
+    ``materialize=False``: for them the checkpoint is pure added cost
+    (measured +16-21% on the sf0.1 cluster headliners). This is the
+    label-table twin of ``minhash_store``: callers that need REUSE
+    ACROSS JOBS should write this frame to parquet and read it back
+    (labels are deterministic given the corpus).
 
     Not fully lazy: the component loop is iterative (one bounded action
     per round, lineage truncated per round — see ``operators.graph``),
     and the default auto gate adds one bounded probe action.
     """
-    from financial_data_pipeline_optimization_spark.operators.graph import (
-        connected_components,
+    stars = _near_dup_stars(
+        df, id_col, text_col, n, min_jaccard, max_iter, pair_source,
+        exact_fanout_budget, on_budget_exceeded, cc_stats, stats,
+        lsh_kwargs,
     )
+    # The document ids are a superset of the graph's node set (every
+    # pair endpoint is a document), so the stars join the ids directly:
+    # ids that are no star's member are their cluster's minimum.
+    ids = df.select(F.col(id_col), *[F.col(c) for c in carry_cols])
+    labels = ids.join(stars, ids[id_col] == stars["member"], "left").select(
+        F.col(id_col),
+        F.coalesce(F.col("root"), F.col(id_col)).alias("cluster_id"),
+        *[F.col(c) for c in carry_cols],
+    )
+    return labels.localCheckpoint(eager=False) if materialize else labels
 
+
+def near_dup_members(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    min_jaccard: float = 0.8,
+    max_iter: int = 25,
+    pair_source: str = "auto",
+    exact_fanout_budget: int = EXACT_FANOUT_BUDGET,
+    on_budget_exceeded: str = "lsh",
+    cc_stats: dict | None = None,
+    stats: dict | None = None,
+    **lsh_kwargs,
+) -> DataFrame:
+    """The documents near-dedup DROPS: ``(id_col,)`` for every document
+    that is in a near-duplicate cluster but is not its minimum id.
+    ``df.join(near_dup_members(df, ...), id_col, "left_anti")`` keeps
+    exactly the rows :func:`near_dup_clusters` labels ``cluster_id ==
+    id``, without a per-document label table: the members are the
+    converged star forest's member column, one row per dropped
+    document, already computed by the component loop's convergence
+    probe.
+
+    Same parameters, pair-source gate, ``exact_fanout_budget`` /
+    ``on_budget_exceeded`` contract and ``stats`` keys as
+    :func:`near_dup_clusters`; the returned frame carries a broadcast
+    hint while its (exactly known) row count fits
+    ``joins.COUNT_BROADCAST_MAX_ROWS``."""
+    stars = _near_dup_stars(
+        df, id_col, text_col, n, min_jaccard, max_iter, pair_source,
+        exact_fanout_budget, on_budget_exceeded, cc_stats, stats,
+        lsh_kwargs,
+    )
+    return stars.select(F.col("member").alias(id_col))
+
+
+def _near_dup_stars(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    min_jaccard: float,
+    max_iter: int,
+    pair_source: str,
+    exact_fanout_budget: int,
+    on_budget_exceeded: str,
+    cc_stats: dict | None,
+    stats: dict | None,
+    lsh_kwargs: dict,
+) -> DataFrame:
+    """The pair-source gate, pair generation and component loop shared
+    by :func:`near_dup_clusters` and :func:`near_dup_members`: returns
+    the converged ``(member, root)`` star forest
+    (``graph.component_stars``).
+
+    The stars are a checkpointed relation AQE cannot size, and without
+    a hint the join against the corpus-sized side is a sort-merge join
+    that shuffles the corpus. Their row count is known exactly (the
+    loop's ``fixpoint_edges``, one per member), so they carry a
+    broadcast hint while that count fits
+    ``joins.COUNT_BROADCAST_MAX_ROWS`` — usually a small fraction of
+    the corpus, but a fully-duplicated corpus puts nearly every
+    document in it, hence a gate, not an unconditional hint."""
     if pair_source not in ("auto", "exact", "lsh"):
         raise ValueError(
             "pair_source must be 'auto', 'exact' or 'lsh', got "
@@ -884,6 +979,10 @@ def near_dup_clusters(
     shared_sets = None
     chosen = pair_source
     if pair_source == "auto":
+        # One sets table for the probe and the pair source. Like every
+        # ``localCheckpoint(eager=False)`` here, under AQE the call runs
+        # the upstream shuffle stages while the frame is being built
+        # (2 jobs per curation-funnel pass), not at the first action.
         shared_sets = _hashed_sorted_sets(
             df, id_col, text_col, n
         ).localCheckpoint(eager=False)
@@ -938,78 +1037,16 @@ def near_dup_clusters(
             **lsh_kwargs,
         )
     # ``count_rounds: False`` suppresses the per-round edge counts the
-    # caller didn't ask for while still receiving the convergence
-    # outputs (rounds, fixpoint_edges) the gate below reads.
-    from financial_data_pipeline_optimization_spark.operators.joins import (
-        COUNT_BROADCAST_MAX_ROWS,
-    )
-
+    # caller didn't ask for while still receiving ``fixpoint_edges``,
+    # which sizes the gate below without a count job of its own.
     cc = cc_stats if cc_stats is not None else {"count_rounds": False}
-    # The star side of the label expression broadcasts under the same
-    # budget as the label table itself (|stars| <= |labels| <=
-    # 2*|stars|, so the half-budget gate keeps both decisions
-    # consistent): when the fixpoint forest is gate-small, the
-    # node-set-vs-stars join needs no shuffle or sort either.
-    comp = connected_components(
-        pairs.select("a", "b"), "a", "b", max_iter=max_iter,
-        stats=cc,
-        broadcast_stars_max_edges=COUNT_BROADCAST_MAX_ROWS // 2,
+    stars = graph.component_stars(
+        pairs.select("a", "b"), "a", "b", max_iter=max_iter, stats=cc
     )
-    # ``carry_cols`` ride along on the one label join (consumers like
-    # representative election would otherwise join the corpus a second
-    # time just to recover a metadata column).
-    #
-    # The component table ships as a SIZE-GATED broadcast (r16: the
-    # derived-join audit found this the one remaining SMJ whose build
-    # side — a checkpointed LogicalRDD — AQE cannot size; the
-    # tools/ab_ndc_label.py A/B measured the broadcast 4-20% faster
-    # on all three corpora, and at 100 TB the avoided exchange is the
-    # CORPUS-SIZED ids side, so local cells understate the win).
-    # comp holds one row per doc in ANY pair — usually small, but a
-    # fully-duplicated corpus puts every doc in it, hence a gate, not
-    # an unconditional hint.
-    #
-    # r17 (VERDICT #4 — construction-action creep): the gate no longer
-    # runs its own count() job over the (node-distinct + star-join)
-    # label plan. The CC loop's convergence probe already materialized
-    # the fixpoint star edges, and for the self-loop-free pair sources
-    # this operator feeds it (both emit a < b), |comp| = |nodes| <=
-    # 2 * fixpoint_edges — so the gate reads that bound (a block-count
-    # job the loop already paid for) and comp itself stays LAZY: its
-    # distinct+join now runs inside the one label-join action instead
-    # of as a separate construction-time materialization. The bound is
-    # <=2x conservative; a borderline corpus (4-8M paired docs) falls
-    # back to the shuffle join it would have needed at scale anyway.
-    comp_bound = 2 * int(cc.get("fixpoint_edges", 0))
-    small = comp_bound <= COUNT_BROADCAST_MAX_ROWS
-    if stats is not None:
-        stats["components_bound"] = comp_bound
-        stats["components_join"] = (
-            "broadcast" if small else "shuffle-fallback"
-        )
-    if small:
-        comp = F.broadcast(comp)
-    ids = df.select(F.col(id_col), *[F.col(c) for c in carry_cols])
-    labels = ids.join(comp, ids[id_col] == comp["node"], "left").select(
-        F.col(id_col),
-        F.coalesce(F.col("component"), F.col(id_col)).alias("cluster_id"),
-        *[F.col(c) for c in carry_cols],
+    return joins.broadcast_if_small(
+        stars, joins.COUNT_BROADCAST_MAX_ROWS, stats, label="stars",
+        rows=cc["fixpoint_edges"],
     )
-    # ``materialize=True`` checkpoints the label table once: consumers
-    # that run MULTIPLE actions over these rows (leakage-safe splits,
-    # budget plans, a range-sorted write's sampling pass) would
-    # otherwise re-execute the post-checkpoint label join (node-set
-    # distinct + star-map join) per action — the labels are
-    # (id, cluster_id [, carry]) rows, orders of magnitude smaller
-    # than the corpus, so the materialization cost is negligible next
-    # to one recomputation. Single-action consumers (run the labels
-    # straight into one aggregate/collect and discard them) should
-    # pass ``materialize=False``: for them the checkpoint is pure
-    # added cost (measured +16-21% on the sf0.1 cluster headliners).
-    # This is the label-table twin of ``minhash_store``: callers that
-    # need REUSE ACROSS JOBS should write this frame to parquet and
-    # read it back (labels are deterministic given the corpus).
-    return labels.localCheckpoint(eager=False) if materialize else labels
 
 
 def elect_representatives(

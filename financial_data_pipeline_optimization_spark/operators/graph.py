@@ -31,7 +31,11 @@ Scale mechanics this encodes:
 - ``localCheckpoint`` after every round TRUNCATES LINEAGE: without it,
   iteration k's plan contains k nested joins and the driver's
   optimizer/DAG work grows quadratically (the classic iterative-
-  algorithm failure mode);
+  algorithm failure mode). ``localCheckpoint(eager=False)`` is not
+  free at construction: under AQE the call runs every upstream
+  shuffle stage of the checkpointed plan while the DataFrame is
+  being built (on the curation funnel each round's checkpoint issues
+  6 jobs and the canonical-edge checkpoint 3);
 - convergence is one bounded action per round, and it is DIRECT: the
   fixpoint of large∘small is exactly a star forest pointing at
   component minima, so the loop probes "no source repeats AND no dest
@@ -42,8 +46,12 @@ Scale mechanics this encodes:
   probe fires on the converged set itself — for the quasi-clique
   graphs near-dup detection emits (diameter ~1, one round to
   converge) that halves the round count;
-- at the fixpoint the edge set IS the answer: ``(node, component-min)``
-  stars. No label table is ever maintained.
+- at the fixpoint the edge set IS the answer: :func:`component_stars`
+  returns it as ``(member, root)`` edges, one per non-root node. No
+  label table is ever maintained; consumers that only need to know
+  which nodes are NOT their component's minimum (near-dedup drops
+  exactly those) read the members directly, and
+  :func:`connected_components` derives per-node labels from it.
 """
 
 from __future__ import annotations
@@ -86,76 +94,21 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return rewired.union(centers)
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "a",
-    dst: str = "b",
-    max_iter: int = 25,
-    out_node: str = "node",
-    out_label: str = "component",
-    stats: dict | None = None,
-    broadcast_stars_max_edges: int = 0,
-) -> DataFrame:
-    """Label every node of the undirected graph ``edges`` with the
-    minimum node id of its connected component.
-
-    Returns ``(node, component)`` for every node that appears in an
-    edge. Raises if the loop hits ``max_iter`` without converging.
-    O(log n) rounds even on path graphs, and convergence is observed
-    ON the converged round (structural star-forest probe, not a
-    cross-round fingerprint compare) — so a non-convergence here means
-    the input is pathological, not that more iterations would help.
-
-    ``stats``: optional dict; on return ``stats["rounds"]`` holds the
-    number of large∘small rounds executed (used by the round-count
-    regression test pinning the O(log n) behavior) and
-    ``stats["edges_per_round"]`` the star-edge count after each round
-    — the Kiveris invariant says it never grows, which is what makes
-    a planted mega-cluster (one hot LSH bucket = one huge clique)
-    safe: the first large-star absorbs it into one star instead of
-    exploding it. The edge counts cost one extra action per round, so
-    they are only computed when a ``stats`` dict is passed
-    (suppressible with ``stats["count_rounds"] = False`` for callers
-    that want only the convergence outputs below); production callers
-    pass ``None`` and pay nothing.
-
-    r17 (VERDICT #4): on convergence ``stats["fixpoint_edges"]`` (when
-    a stats dict is passed) records the star-forest edge count — one
-    ``count()`` over the final round's ALREADY-MATERIALIZED lazy
-    checkpoint (the convergence probe's action computed those blocks),
-    i.e. a block-sized job, not a recomputation. Consumers use it to
-    SIZE-BOUND the returned label relation without running their own
-    count job over the (distinct + join) label plan: at the fixpoint
-    every non-root node carries exactly one out-edge and every root is
-    some edge's destination, so for self-loop-free input
-    ``|labels| = |nodes| <= 2 * fixpoint_edges``.
-
-    ``broadcast_stars_max_edges`` (r17): when > 0 and the fixpoint
-    star forest holds at most that many edges, the returned label
-    expression joins ``nodes`` against a BROADCAST of the (node-sized,
-    already-checkpointed) star edges instead of a shuffle join — the
-    same size-gate discipline as ``kcore_peel``'s keep lists, decided
-    from the count the convergence probe already materialized (no
-    extra scan of anything; the count itself runs regardless of
-    ``stats`` when this gate is armed). 0 (the default) keeps the
-    planner's choice — the safe default for unbounded graphs.
-    """
-    # One checkpoint of the canonical edge set; node set and working
-    # edges both derive from it LAZILY — checkpointing them separately
-    # would compute the (possibly expensive) upstream pair-generation
-    # plan once per checkpoint.
-    base = (
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The distinct ``(s, d)`` edge set, checkpointed once: the star
+    loop and :func:`connected_components`' node set both read it, so
+    the (possibly expensive) upstream pair-generation plan runs once."""
+    return (
         edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
         .distinct()
         .localCheckpoint(eager=False)
     )
-    nodes = (
-        base.select(F.col("s").alias("n"))
-        .union(base.select(F.col("d").alias("n")))
-        .distinct()
-    )
-    e = base.where(F.col("s") != F.col("d"))
 
+
+def _star_forest(base: DataFrame, max_iter: int, stats: dict | None):
+    """Run large∘small rounds over the canonical edges ``base`` until
+    the edge set is a star forest; returns its ``(s, d)`` edges."""
+    e = base.where(F.col("s") != F.col("d"))
     for rounds in range(1, max_iter + 1):
         sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
         e = (
@@ -183,34 +136,89 @@ def connected_components(
             chained.select(F.lit(1).alias("v"))
         )
         if violations.isEmpty():
-            n_stars = None
-            if stats is not None or broadcast_stars_max_edges:
+            if stats is not None:
                 # Cheap by construction: the isEmpty probe just
                 # materialized e's checkpoint, so this counts cached
                 # blocks (reused from edges_per_round when present).
-                per_round = (stats or {}).get("edges_per_round")
-                n_stars = per_round[-1] if per_round else e.count()
-            if stats is not None:
+                per_round = stats.get("edges_per_round")
                 stats["rounds"] = rounds
-                stats["fixpoint_edges"] = n_stars
-            # Fixpoint edges are (node, component-min) stars; nodes
-            # absent from the star map (component minima, nodes whose
-            # only edges were self-loops) label themselves.
-            star = e
-            if (
-                broadcast_stars_max_edges
-                and n_stars <= broadcast_stars_max_edges
-            ):
-                star = F.broadcast(e)
-            return (
-                nodes.join(star, nodes["n"] == star["s"], "left")
-                .select(
-                    F.col("n").alias(out_node),
-                    F.coalesce(F.col("d"), F.col("n")).alias(out_label),
+                stats["fixpoint_edges"] = (
+                    per_round[-1] if per_round else e.count()
                 )
-            )
+            return e
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
+        f"connected components did not converge in {max_iter} rounds"
+    )
+
+
+def component_stars(
+    edges: DataFrame,
+    src: str = "a",
+    dst: str = "b",
+    max_iter: int = 25,
+    stats: dict | None = None,
+) -> DataFrame:
+    """The converged star forest of the undirected graph ``edges``:
+    ``(member, root)`` edges where ``root`` is the minimum node id of
+    ``member``'s connected component. Every node that is not its
+    component's minimum appears exactly once as a ``member``, always
+    ``member > root``; component minima and nodes whose only edges are
+    self-loops appear as no ``member``. Duplicate edges and self-loops
+    in the input are harmless.
+
+    Raises if the loop hits ``max_iter`` without converging. O(log n)
+    rounds even on path graphs, and convergence is observed ON the
+    converged round (structural star-forest probe, not a cross-round
+    fingerprint compare) — so a non-convergence here means the input
+    is pathological, not that more iterations would help. The returned
+    frame is the last round's checkpoint, already computed by the
+    convergence probe.
+
+    ``stats``: optional dict; on return ``stats["rounds"]`` holds the
+    number of large∘small rounds executed (used by the round-count
+    regression test pinning the O(log n) behavior),
+    ``stats["fixpoint_edges"]`` the number of star edges — which is
+    exactly the number of members, counted over the already-computed
+    checkpoint blocks — and ``stats["edges_per_round"]`` the star-edge
+    count after each round. The Kiveris invariant says the last never
+    grows, which is what makes a planted mega-cluster (one hot LSH
+    bucket = one huge clique) safe: the first large-star absorbs it
+    into one star instead of exploding it. The per-round counts cost
+    one extra action per round, so they are only computed when a
+    ``stats`` dict is passed, and ``stats["count_rounds"] = False``
+    suppresses them for callers that want only ``rounds`` and
+    ``fixpoint_edges``. Production callers that need neither pass
+    ``None`` and pay nothing.
+    """
+    e = _star_forest(_canonical_edges(edges, src, dst), max_iter, stats)
+    return e.select(F.col("s").alias("member"), F.col("d").alias("root"))
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "a",
+    dst: str = "b",
+    max_iter: int = 25,
+    out_node: str = "node",
+    out_label: str = "component",
+    stats: dict | None = None,
+) -> DataFrame:
+    """Label every node of the undirected graph ``edges`` with the
+    minimum node id of its connected component: ``(node, component)``
+    for every node that appears in an edge, built as the node set left
+    joined to :func:`component_stars` (nodes that are no star's member
+    label themselves). Same loop, convergence contract and ``stats``
+    as :func:`component_stars`."""
+    base = _canonical_edges(edges, src, dst)
+    nodes = (
+        base.select(F.col("s").alias("n"))
+        .union(base.select(F.col("d").alias("n")))
+        .distinct()
+    )
+    star = _star_forest(base, max_iter, stats)
+    return nodes.join(star, nodes["n"] == star["s"], "left").select(
+        F.col("n").alias(out_node),
+        F.coalesce(F.col("d"), F.col("n")).alias(out_label),
     )
 
 

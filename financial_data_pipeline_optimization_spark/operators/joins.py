@@ -65,6 +65,7 @@ def broadcast_if_small(
     max_rows: int,
     stats: dict | None = None,
     label: str = "relation",
+    rows: int | None = None,
 ) -> DataFrame:
     """SIZE-GATED broadcast hint (the ``kcore_peel`` gate discipline
     applied to join relations): count ``df`` once and return
@@ -96,8 +97,12 @@ def broadcast_if_small(
     ``stats``: on return ``stats[f"{label}_rows"]`` holds the measured
     count and ``stats[f"{label}_join"]`` the chosen mode
     (``"broadcast"`` / ``"shuffle-fallback"``) — the same observability
-    hook as ``kcore_peel``'s ``peel_mode``."""
-    n = df.count()
+    hook as ``kcore_peel``'s ``peel_mode``.
+
+    ``rows``: the row count when the caller already knows it exactly
+    (e.g. ``graph.component_stars``' ``fixpoint_edges``); no count job
+    runs then."""
+    n = df.count() if rows is None else rows
     small = n <= max_rows
     if stats is not None:
         stats[f"{label}_rows"] = n

@@ -362,15 +362,6 @@ def lsh_topk(
     )
 
 
-def _unit_rows(mat):
-    """Row-normalize a matrix; zero rows pass through unscaled."""
-    import numpy as np
-
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0.0] = 1.0
-    return mat / norms
-
-
 def _nearest_cells(
     df: DataFrame,
     cen_unit,

@@ -14,7 +14,8 @@ production corpus build runs them —
 4. **exact dedup** — normalized-content hash, keep lowest id
    (``operators.dedup.exact_dedup``);
 5. **near-dedup** — n-gram-Jaccard pairs → connected components →
-   keep each cluster's minimum id (``operators.dedup.near_dup_clusters``);
+   keep each cluster's minimum id by anti-joining the documents that
+   are not (``operators.dedup.near_dup_members``);
 6. **annotate** — token counts for budget accounting
    (``operators.text.with_token_count``);
 7. **split** — deterministic train/val/test by key hash
@@ -57,7 +58,7 @@ def curate_corpus(
 
     EXACT-CLOSURE-SENSITIVE: the near-dedup stage decides which
     documents survive into the split assignment, so this plan calls
-    ``near_dup_clusters`` with ``on_budget_exceeded="error"`` — past
+    ``near_dup_members`` with ``on_budget_exceeded="error"`` — past
     the exact fan-out budget it raises
     :class:`~financial_data_pipeline_optimization_spark.operators.dedup.ExactFanoutBudgetExceeded`
     instead of silently downgrading to finer LSH clusters (which
@@ -75,14 +76,11 @@ def curate_corpus(
     )
     out = dedup.exact_dedup(out, [text_col], id_col)
     if near_dedup:
-        clusters = dedup.near_dup_clusters(
+        dups = dedup.near_dup_members(
             out, id_col, text_col, n=2, min_jaccard=near_dup_jaccard,
             pair_source=pair_source, on_budget_exceeded="error",
         )
-        keep = clusters.filter(
-            F.col(id_col) == F.col("cluster_id")
-        ).select(id_col)
-        out = out.join(keep, id_col, "left_semi")
+        out = out.join(dups, id_col, "left_anti")
     out = text.with_token_count(out, text_col)
     out = sampling.with_split(
         out, [id_col], splits or {"train": 0.9, "val": 0.05, "test": 0.05}
@@ -100,13 +98,13 @@ def funnel_counts_df(
     ``(n_input, n_lang_filtered, n_quality_filtered, n_exact_deduped,
     n_near_deduped)``.
 
-    The five counts are one lazy plan: each stage boundary is a lazy
-    ``localCheckpoint`` (computed once, shared by its own count AND the
-    next stage), and the one-row aggregates are combined with 1×1
-    crossJoins, so collecting the row is ONE job instead of five
-    serial count() actions re-deriving the funnel prefix each time.
+    Each stage boundary is a ``localCheckpoint`` (computed once,
+    shared by its own count AND the next stage), and the one-row
+    aggregates are combined with 1×1 crossJoins, so collecting the row
+    is ONE job instead of five serial count() actions re-deriving the
+    funnel prefix each time.
 
-    NOT fully lazy: ``near_dup_clusters``'s connected-components loop
+    NOT fully lazy: ``near_dup_members``'s connected-components loop
     runs bounded actions at CONSTRUCTION time (see ``operators.graph``)
     — building this DataFrame already computes the dedup stages.
     Plan-inspection tooling that assumes construction is action-free
@@ -135,13 +133,13 @@ def funnel_counts_df(
     exact = dedup.exact_dedup(quality, [text_col], id_col).localCheckpoint(
         eager=False
     )
-    clusters = dedup.near_dup_clusters(
+    dups = dedup.near_dup_members(
         exact, id_col, text_col, n=2,
         min_jaccard=kwargs.get("near_dup_jaccard", 0.8),
         pair_source=kwargs.get("pair_source", "auto"),
         on_budget_exceeded="error",
     )
-    survivors = clusters.filter(F.col(id_col) == F.col("cluster_id"))
+    survivors = exact.join(dups, id_col, "left_anti")
 
     def n(df: DataFrame, alias: str) -> DataFrame:
         return df.agg(F.count(F.lit(1)).cast("long").alias(alias))
@@ -209,7 +207,7 @@ def multimodal_funnel_counts_df(
       shifted-edit robustness per-container hashing can't give.
 
     Edges from all modalities union (distinct) into ONE
-    ``graph.connected_components`` pass, so a document whose text was
+    ``graph.component_stars`` pass, so a document whose text was
     paraphrased but whose image is pixel-identical still lands in the
     same cluster — the property three per-modality dedups can't give
     without a cross-modality join. Per-stage survivor counts return as
@@ -221,7 +219,7 @@ def multimodal_funnel_counts_df(
     before any payload is decoded or any pair join runs; every pair
     source is banded/prefix-filtered (never all-pairs); the union of
     edge sets is id-pairs only (16 bytes/row — payloads never reach
-    the CC pass); and connected_components is the same
+    the CC pass); and component_stars is the same
     large-star/small-star loop every other dedup path rides. Like
     ``funnel_counts_df``, NOT action-free at construction (the CC loop
     runs bounded actions when the DataFrame is built).
@@ -232,6 +230,7 @@ def multimodal_funnel_counts_df(
     """
     from financial_data_pipeline_optimization_spark.operators import (
         graph,
+        joins,
         multimodal,
     )
 
@@ -326,17 +325,17 @@ def multimodal_funnel_counts_df(
             edges = edges.unionByName(p)
     edges = edges.distinct()
 
-    comp = graph.connected_components(edges)
-    survivors = (
-        exact.join(
-            comp.withColumnRenamed("node", id_col), id_col, "left"
-        )
-        .where(
-            F.coalesce(F.col("component"), F.col(id_col))
-            == F.col(id_col)
-        )
-        .select(id_col)
+    # Survivors are the documents that are no star's member (the
+    # near_dup_members shape, with the multimodal edge set).
+    cc = {"count_rounds": False}
+    dups = joins.broadcast_if_small(
+        graph.component_stars(edges, stats=cc).select(
+            F.col("member").alias(id_col)
+        ),
+        joins.COUNT_BROADCAST_MAX_ROWS,
+        rows=cc["fixpoint_edges"],
     )
+    survivors = exact.join(dups, id_col, "left_anti")
 
     def n(df: DataFrame, alias: str) -> DataFrame:
         return df.agg(F.count(F.lit(1)).cast("long").alias(alias))

@@ -363,6 +363,17 @@ _CHANGED_SINCE_CHECK: tuple[tuple[str, int], ...] = (
     ("knn_ivf_recall_check", 17),
     ("kmeans_cluster_check", 17),
     ("semdedup_check", 17),
+    # r18: near-dedup reads the connected-components star forest
+    # directly. Labels are ids LEFT JOIN stars (no node-set distinct),
+    # the star broadcast gate reads the exact fixpoint edge count, and
+    # both curation funnels drop near duplicates with one left_anti
+    # join on the members instead of a checkpointed label table.
+    # Values identical; plans changed — re-prove.
+    ("near_dup_clusters", 18),
+    ("cluster_representatives", 18),
+    ("leakage_safe_split", 18),
+    ("corpus_curation_funnel", 18),
+    ("multimodal_curation_funnel", 18),
 )
 
 

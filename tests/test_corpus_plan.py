@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from financial_data_pipeline_optimization_spark.operators import dedup, joins
 from financial_data_pipeline_optimization_spark.plans.corpus import (
     curate_corpus,
     funnel_counts,
@@ -51,6 +53,107 @@ def test_funnel_counts_monotone_decreasing(spark):
     vals = [c[k] for k in order]
     assert vals == sorted(vals, reverse=True)
     assert vals[-1] > 0
+
+
+def _chain_corpus(spark, ids):
+    """Six documents under the given ids: A~B and B~C are near
+    duplicates (bigram Jaccard 0.82) while A~C is not (0.67), D~E are
+    near duplicates, F is unique."""
+    words = [f"word{i:02d}" for i in range(60)]
+
+    def doc(start, n=41):
+        return " ".join(words[start:start + n]) + "."
+
+    texts = [
+        doc(0), doc(4), doc(8),
+        " ".join(reversed(words[:30])) + ".",
+        " ".join(reversed(words[1:31])) + ".",
+        " ".join(words[::2]) + ".",
+    ]
+    return spark.createDataFrame(
+        list(zip(ids, texts)), "doc_id long, text string"
+    )
+
+
+@pytest.mark.parametrize(
+    "ids", [[11, 22, 33, 44, 55, 66], [66, 33, 11, 55, 44, 22]]
+)
+def test_curate_corpus_drops_exactly_the_cluster_members(spark, ids):
+    """The anti-join on near_dup_members keeps exactly the
+    ``cluster_id == doc_id`` rows of near_dup_clusters: the A~B~C chain
+    collapses to its minimum id although A~C is no pair, under two
+    ``doc_id`` relabellings (which change the surviving id)."""
+    docs = _chain_corpus(spark, ids)
+    a, b, c = ids[:3]
+    pairs = {
+        (r.a, r.b)
+        for r in dedup.ngram_jaccard_pairs(
+            docs, "doc_id", "text", n=2, min_jaccard=0.8
+        ).collect()
+    }
+    assert (min(a, c), max(a, c)) not in pairs
+    assert {(min(a, b), max(a, b)), (min(b, c), max(b, c))} <= pairs
+
+    labels = dedup.near_dup_clusters(
+        docs, "doc_id", "text", n=2, min_jaccard=0.8
+    )
+    want = {
+        r.doc_id
+        for r in labels.where(F.col("doc_id") == F.col("cluster_id"))
+        .collect()
+    }
+    got = [
+        r.doc_id
+        for r in curate_corpus(
+            docs, languages=("en", "und"), min_tokens=5
+        ).collect()
+    ]
+    assert len(got) == len(set(got))
+    assert set(got) == want
+    assert want == {min(a, b, c), min(ids[3], ids[4]), ids[5]}
+
+
+def test_near_dedup_anti_join_broadcast_gate(spark, monkeypatch):
+    """The members ship as a broadcast while their count (the star
+    forest's ``fixpoint_edges``) fits COUNT_BROADCAST_MAX_ROWS; with
+    the budget below the member count the anti-join loses the hint and
+    the survivors are identical."""
+    docs = _chain_corpus(spark, [11, 22, 33, 44, 55, 66])
+    keys = [
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    ]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+
+    def anti_join_nodes(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return [ln for ln in plan.splitlines() if "LeftAnti" in ln]
+
+    def curate():
+        return curate_corpus(docs, languages=("en", "und"), min_tokens=5)
+
+    try:
+        # Off: at this size the optimizer would broadcast without the
+        # hint and mask what is pinned here.
+        for k in keys:
+            spark.conf.set(k, "-1")
+        hinted = curate()
+        assert all(
+            "BroadcastHashJoin" in ln for ln in anti_join_nodes(hinted)
+        ) and anti_join_nodes(hinted)
+        survivors = sorted(r.doc_id for r in hinted.collect())
+
+        monkeypatch.setattr(joins, "COUNT_BROADCAST_MAX_ROWS", 1)
+        shuffled = curate()
+        nodes = anti_join_nodes(shuffled)
+        assert nodes and not any("BroadcastHashJoin" in ln for ln in nodes)
+        assert sorted(r.doc_id for r in shuffled.collect()) == survivors
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def test_incremental_ingest_partitions_the_new_batch(spark):

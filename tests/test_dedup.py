@@ -368,14 +368,13 @@ def test_near_dup_auto_gate_both_ways(spark):
     )
     assert st_explicit["pair_source"] == "lsh"
     assert "exact_index_fanout" not in st_explicit  # probe skipped
-    # r16/r17: the label-join broadcast gate reports through the same
-    # stats dict. The bound derives from the CC loop's materialized
-    # fixpoint star edges (2x, self-loop-free pair sources), so no
-    # separate count job runs at construction; on this tiny corpus the
-    # paired-node count is far under budget, so the gate must choose
-    # the broadcast.
-    assert st_explicit["components_join"] == "broadcast"
-    assert 0 <= st_explicit["components_bound"] <= 2 * len(lsh)
+    # The star-forest broadcast gate reports through the same stats
+    # dict. Its size is the CC loop's fixpoint edge count (one edge
+    # per non-representative document), so no separate count job runs
+    # at construction; on this tiny corpus it is far under budget, so
+    # the gate must choose the broadcast.
+    assert st_explicit["stars_join"] == "broadcast"
+    assert 0 <= st_explicit["stars_rows"] < len(lsh)
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="pair_source"):

@@ -6,6 +6,7 @@ import pytest
 
 from financial_data_pipeline_optimization_spark.operators import dedup
 from financial_data_pipeline_optimization_spark.operators.graph import (
+    component_stars,
     connected_components,
 )
 
@@ -67,6 +68,60 @@ def test_chain_round_count_is_logarithmic(spark):
     }
     assert got == {i: 1 for i in range(1, n + 1)}
     assert stats["rounds"] <= 10, stats
+
+
+def _component_min(edges):
+    """Union-find reference: node -> minimum node of its component."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in list(parent)}
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        pytest.param([(i, i + 1) for i in range(1, 30)], id="path"),
+        pytest.param(
+            [(a, b) for a in range(10, 30) for b in range(a + 1, 30)]
+            + [(40, 41)],
+            id="planted-clique",
+        ),
+        pytest.param(
+            [(5, 5), (1, 2), (2, 1), (2, 3), (2, 3), (7, 7), (8, 7)],
+            id="self-loops-and-duplicates",
+        ),
+    ],
+)
+def test_component_stars_invariants(spark, edges):
+    """The converged star forest: each non-root node is a member
+    exactly once, no root is a member, ``member > root``, and the root
+    is the component minimum. Roots and self-loop-only nodes are absent,
+    and ``fixpoint_edges`` is exactly the member count."""
+    stats = {}
+    stars = [
+        (r.member, r.root)
+        for r in component_stars(
+            spark.createDataFrame(edges, "a long, b long"), stats=stats
+        ).collect()
+    ]
+    members = [m for m, _ in stars]
+    assert len(members) == len(set(members))
+    assert not {r for _, r in stars} & set(members)
+    assert all(m > r for m, r in stars)
+    want = _component_min([(a, b) for a, b in edges if a != b])
+    assert dict(stars) == {n: c for n, c in want.items() if n != c}
+    assert stats["fixpoint_edges"] == len(stars)
 
 
 def test_lsh_pair_source_refines_exact_clusters(spark):

@@ -418,9 +418,14 @@ def test_salted_join_spreads_planted_skew_and_aqe_marks_it(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
+        "spark.sql.shuffle.partitions",
     ]
     saved = {k: spark.conf.get(k, None) for k in keys}
     try:
+        # The session sets one shuffle partition per core; pin 16 so
+        # the 6,400 background rows spread to ~400 per reducer on any
+        # host and only the hot key's reducer passes 1,000 rows.
+        spark.conf.set("spark.sql.shuffle.partitions", "16")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         hot = 200_000
